@@ -14,6 +14,7 @@ loading TrOCR once per process (text_recognition.py:37-51).
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -126,6 +127,69 @@ def make_extract_rows_kernel(cfg: ExtractConfig = DEFAULT_CONFIG):
                     conv_id, int(turn_idx), txt if isinstance(txt, str) else None, cfg=cfg,
                 ))
             yield pd.DataFrame(rows, columns=_SPAN_COLS)
+
+    return kernel
+
+
+JOB_ROW_SCHEMA = T.StructType(
+    SPAN_ROW_SCHEMA.fields + [T.StructField("bucket_id", T.IntegerType(), False)])
+
+
+class ReplaceByKey(AccumulatorParam):
+    """Accumulator of per-task counters keyed by partition id.  A later
+    update for a key REPLACES the earlier one, so a task whose update is
+    applied twice (a re-executed stage) still counts once; a failed task
+    attempt sends no update at all."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, acc: dict, update: dict) -> dict:
+        acc.update(update)
+        return acc
+
+
+def make_job_kernel(cfg: ExtractConfig, counters):
+    """mapInPandas kernel of the extract job: the fused per-turn pipeline
+    over ``(conv_id, turn_idx, text, bucket_id)`` rows, emitting span rows
+    plus their bucket_id, with the run's lineage counters riding along.
+
+    ``counters`` is a ``ReplaceByKey`` accumulator; each task adds ONE
+    entry ``{partition_id: (turns_in by bucket, spans_out by bucket,
+    detected candidates)}`` when its input is exhausted, so the job needs
+    no counting pass of its own.  Rows are byte-equal to
+    ``make_extract_rows_kernel``'s (both call the same oracle sweep)."""
+    from collections import Counter
+
+    from pyspark import TaskContext
+
+    from p_id_text_extraction_spark.oracle.pipeline import extract_turn_counted
+
+    def kernel(batches):
+        turns_in: Counter = Counter()
+        spans_out: Counter = Counter()
+        n_cands = 0
+        for pdf in batches:
+            rows: list[tuple] = []
+            buckets: list[int] = []
+            bucket_col = pdf["bucket_id"].tolist()
+            for conv_id, turn_idx, txt, b in zip(
+                pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist(),
+                bucket_col,
+            ):
+                out, c = extract_turn_counted(
+                    conv_id, int(turn_idx), txt if isinstance(txt, str) else None, cfg)
+                n_cands += c
+                if out:
+                    rows.extend(out)
+                    buckets.extend([b] * len(out))
+            turns_in.update(bucket_col)
+            spans_out.update(buckets)
+            frame = pd.DataFrame(rows, columns=_SPAN_COLS)
+            frame["bucket_id"] = buckets
+            yield frame
+        counters.add({TaskContext.get().partitionId():
+                      (dict(turns_in), dict(spans_out), n_cands)})
 
     return kernel
 

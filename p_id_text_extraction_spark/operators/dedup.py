@@ -232,8 +232,9 @@ def hashed_grams_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
     (split -> transform concat_ws -> array_distinct -> explode -> md5 ->
     conv) that dominated ngram_jaccard_pairs' pre-join stage; the
     normalization projection stays JVM-side.  ``size(hs)`` equals the
-    relational set_size (count of distinct gram strings) by construction.
-    Docs with no full shingle emit no row (matching the relational
+    relational set_size (count of distinct gram strings) by construction;
+    ``hs`` is sorted, so a retried task emits the same array.  Docs with
+    no full shingle or NULL text emit no row (matching the relational
     ``set_size > 0`` filter on sizes and the empty explode)."""
     from collections.abc import Iterator
 
@@ -245,7 +246,7 @@ def hashed_grams_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
         from hashlib import md5
 
     FOUR = np.uint64(4)
-    pruned = _spread(docs).select("doc_id", _norm_text().alias("t"))
+    pruned = _spread(docs).select("doc_id", _norm_text().alias("t")).filter(F.col("t").isNotNull())
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -257,8 +258,11 @@ def hashed_grams_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
                     continue
                 grams = {" ".join(toks[i:i + n]) for i in range(m)}
                 digests = [md5(g.encode("utf-8")).digest() for g in grams]
-                hs = (np.frombuffer(b"".join(digests), dtype=">u8")[::2]
-                      .astype(np.uint64) >> FOUR)
+                # sorted: the set's iteration order follows the worker's
+                # string-hash seed, and a retried task must emit the same
+                # array
+                hs = np.sort(np.frombuffer(b"".join(digests), dtype=">u8")[::2]
+                             .astype(np.uint64) >> FOUR)
                 ids.append(doc_id)
                 hss.append(hs.astype(np.int64).tolist())
             yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
@@ -293,8 +297,8 @@ def minhash_sketches_kernel(docs: DataFrame, n: int = 3, num_hashes: int = 32,
         order-free: size, array_intersect size, min folds);
       * sig[i] = min over hg%%P of (a_i*h + b_i)%%P, exact in uint64
         (a_i, h < 2^30 so products stay < 2^60).
-    Docs with no full shingle emit no row, matching the relational
-    ``size(hhs) > 0`` filter."""
+    Docs with no full shingle or NULL text emit no row, matching the
+    relational ``size(hhs) > 0`` filter."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -309,7 +313,7 @@ def minhash_sketches_kernel(docs: DataFrame, n: int = 3, num_hashes: int = 32,
     B = np.array([b for _, b in coeffs], dtype=np.uint64).reshape(-1, 1)
     P = np.uint64(MINHASH_P)
     FOUR = np.uint64(4)
-    pruned = _spread(docs).select("doc_id", _norm_text().alias("t"))
+    pruned = _spread(docs).select("doc_id", _norm_text().alias("t")).filter(F.col("t").isNotNull())
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

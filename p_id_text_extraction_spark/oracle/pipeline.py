@@ -157,16 +157,26 @@ def extract_turn_tuples(
     conv_id: str, turn_idx: int, text: str | None, role: str | None = None,
     tool: str | None = None, cfg: ExtractConfig = DEFAULT_CONFIG,
 ) -> list[tuple]:
+    """Full oracle pipeline for one turn; tuples in OUTPUT_FIELDS order."""
+    return extract_turn_counted(conv_id, turn_idx, text, cfg)[0]
+
+
+def extract_turn_counted(
+    conv_id: str, turn_idx: int, text: str | None,
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+) -> tuple[list[tuple], int]:
     """Full oracle pipeline for one turn, fused into a single sorted sweep.
 
-    This is the HOT implementation (the distributed kernel in
-    functions/udfs.py calls it per turn): suppress, cluster and merge all
+    This is the HOT implementation (the distributed kernels in
+    functions/udfs.py call it per turn): suppress, cluster and merge all
     consume the same (start asc, end desc, kind, block_idx) order, so one
     sort + one pass computes them together -- suppress tracks its running
     max over ALL rows, cluster over KEPT rows, merge folds the open
     cluster's accumulators (exactly the staged semantics; the
     tests/test_spec.py property pins `extract_turn` == staged composition).
-    Returns tuples in OUTPUT_FIELDS order.
+    Returns (tuples in OUTPUT_FIELDS order, detected candidate count) --
+    the count is the relational plan's observed ``candidates_in`` for this
+    turn, free here because the sweep already holds the candidate list.
     """
     norm_text = spec.parse_canvas(text)
     n = len(norm_text)
@@ -176,7 +186,7 @@ def extract_turn_tuples(
              for idx, g_start, g_end, kind, conf, ls, le
              in spec.detect_all_spans(norm_text, cfg)]
     if not cands:
-        return []
+        return [], 0
     cands.sort()
 
     thresh = cfg.contain_threshold_milli
@@ -241,7 +251,7 @@ def extract_turn_tuples(
          kind, out_text, conf / 1000.0, method, provenance, grouped)
         for rank, (c_start, c_end, kind, out_text, method, provenance, grouped, conf)
         in enumerate(rows, start=1)
-    ]
+    ], len(cands)
 
 
 def extract_turn(

@@ -1,12 +1,17 @@
-"""Checkpoint manifest + idempotent anti-join resume (SURVEY.md J7).
+"""Checkpoint manifest + bucket-granular resume (SURVEY.md J7).
 
 The reference restarts at stage granularity (`--start-at`,
 run_pipeline.py:336-341,368-387).  At 10^12-turn scale the unit of restart
 is an input *bucket*: ``bucket_id = pmod(xxhash64(conv_id), n_buckets)``
 (deterministic across runs -- xxhash64 is seed-stable).  A manifest table
 records each completed (bucket_id, job_fingerprint) with lineage counters
-(FIXTURES.md section 3); resume left-anti-joins the input against it and
-re-processes only missing buckets.
+(FIXTURES.md section 3); resume filters the input down to the missing
+buckets and re-processes only those.
+
+The job is one pass: turns shuffle by bucket_id (the only exchange), the
+fused kernel runs in the write's result stage, and each run writes one
+data file per bucket.  Kernel and write parallelism is
+``min(todo buckets, write partitions)`` -- the bucket count caps it.
 
 Idempotence and isolation rules:
   * the fingerprint covers config AND n_buckets -- a manifest row can never
@@ -18,9 +23,10 @@ Idempotence and isolation rules:
     the write -- a bucket that died mid-write is fully rewritten on retry,
     and a todo bucket that yields ZERO spans still ends up empty instead of
     retaining rows from an aborted earlier attempt;
-  * counters come from the in-plan DataFrame (observe + a groupBy on the
-    cached spans), never from re-reading the output directory -- at 100 TB
-    a read-back is two extra full passes over everything ever written.
+  * counters ride an accumulator the kernel updates once per task, keyed
+    by partition id and merged by replacement (a re-applied task update
+    cannot double-count), never a re-read of the output directory -- at
+    100 TB a read-back is two extra full passes over everything written.
 
 Production target is two Iceberg tables; the sandbox has no Iceberg jars,
 so both land as partitioned parquet with identical semantics.
@@ -29,13 +35,20 @@ so both land as partitioned parquet with identical semantics.
 from __future__ import annotations
 
 import os
+import statistics
+import struct
+from collections import Counter
 from dataclasses import asdict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from p_id_text_extraction_spark.config import DEFAULT_CONFIG, ExtractConfig
-from p_id_text_extraction_spark.plans.pipeline import extract_pipeline
+from p_id_text_extraction_spark.functions.udfs import (
+    JOB_ROW_SCHEMA,
+    ReplaceByKey,
+    make_job_kernel,
+)
 
 MANIFEST_COLUMNS = ["bucket_id", "job_fingerprint", "turns_in", "spans_out",
                     "classifier_drop_rate", "task_rows_max",
@@ -114,6 +127,27 @@ def _clear_todo_partitions(spark: SparkSession, output_dir: str,
         delete_path(spark, f"{base}/bucket_id={b}")
 
 
+def write_slots(todo_ids: list[int], n_buckets: int, n_write: int) -> Column:
+    """Shuffle key that deals the todo buckets round-robin over ``n_write``
+    partitions -- each bucket in exactly one task, task bucket counts
+    differing by at most one.  Hash-partitioning ``bucket_id`` directly
+    collides: 4 buckets fill only 2 of 4 partitions, and 64 buckets over 4
+    split 11/16/16/21.  Spark's hash partitioner sends an int ``v`` to
+    ``pmod(murmur3_x86_32(v, seed=42), n)``, so the driver picks one int
+    per partition and ``bucket_id`` indexes a literal array of them."""
+    from p_id_text_extraction_spark.sources.iceberg_format import murmur3_32
+    key_of: dict[int, int] = {}
+    v = 0
+    while len(key_of) < n_write:
+        h = murmur3_32(struct.pack("<i", v), 42)
+        key_of.setdefault((h - (h >> 31 << 32)) % n_write, v)
+        v += 1
+    slots = [0] * n_buckets
+    for i, b in enumerate(todo_ids):
+        slots[b] = key_of[i % n_write]
+    return F.element_at(F.array(*map(F.lit, slots)), F.col("bucket_id") + 1)
+
+
 def run_with_resume(
     spark: SparkSession,
     turns: DataFrame,
@@ -123,23 +157,22 @@ def run_with_resume(
     n_buckets: int = 16,
     bucket_filter: list[int] | None = None,
     write_partitions: int | None = None,
-    strategy: str = "relational",
     catalog: str = "parquet",
     spans_layout: str = "identity",
 ) -> dict:
-    """Run the pipeline over not-yet-completed buckets; append manifest rows.
+    """Run the fused pipeline over not-yet-completed buckets; append
+    manifest rows.
+
+    One pass: the todo turns (a literal ``isin`` on the collected done
+    list) shuffle by bucket (``write_slots``) and the fused kernel runs in
+    the write's result stage, so each bucket is extracted and written by
+    one task: one data file per bucket per run, and kernel and write
+    parallelism ``min(todo buckets, write_partitions)`` (default: the
+    session's shuffle partitions).  All counters ride a ``ReplaceByKey``
+    accumulator the kernel updates -- no cache, counting job or re-scan.
 
     ``bucket_filter`` (tests only) simulates a run killed after finishing a
-    subset of buckets.  ``write_partitions`` sizes the final shuffle before
-    the write (default: session shuffle partitions) -- the write fans out
-    over (bucket_id, conv_id), NOT just bucket_id, so output parallelism
-    tracks the cluster instead of collapsing to n_buckets tasks.
-
-    ``strategy``: 'relational' (default -- the declarative window/aggregate
-    plan, with observe()-based candidate lineage) or 'fused' (the map-only
-    kernel: fastest and shuffle-free, but candidate counts never
-    materialize, so classifier_drop_rate is recorded as NaN).
-    Both strategies produce byte-identical spans (tests/test_resume.py).
+    subset of buckets.
 
     ``catalog``: 'parquet' (partitioned parquet + explicit todo-partition
     clears) or 'iceberg' (both sinks are Iceberg tables via
@@ -157,8 +190,6 @@ def run_with_resume(
 
     Returns the counter dict for the run.
     """
-    if strategy not in ("relational", "fused"):
-        raise ValueError(f"unknown strategy {strategy!r}: use 'relational' or 'fused'")
     if catalog not in ("parquet", "iceberg"):
         raise ValueError(f"unknown catalog {catalog!r}: use 'parquet' or 'iceberg'")
     if spans_layout not in ("identity", "bucket"):
@@ -166,9 +197,9 @@ def run_with_resume(
     if spans_layout == "bucket" and catalog != "iceberg":
         raise ValueError("spans_layout='bucket' requires catalog='iceberg' "
                          "(hidden partition transforms are an Iceberg concept)")
+    cfg.validate()
     bucket_fn = "iceberg" if spans_layout == "bucket" else "xxhash"
     fingerprint = job_fingerprint(cfg, n_buckets, bucket_fn)
-    bucketed = with_bucket(turns, n_buckets, bucket_fn)
 
     if catalog == "iceberg":
         from p_id_text_extraction_spark.sources import iceberg as ice
@@ -182,101 +213,70 @@ def run_with_resume(
     else:
         done = completed_buckets(spark, manifest_dir, fingerprint)
     done_ids = {r.bucket_id for r in done.collect()}           # <= n_buckets rows
-    todo = bucketed.join(done, "bucket_id", "left_anti")       # J7: resume anti-join
-    if bucket_filter is not None:
-        todo = todo.filter(F.col("bucket_id").isin(bucket_filter))
     todo_ids = [b for b in range(n_buckets)
                 if b not in done_ids and (bucket_filter is None or b in bucket_filter)]
+    if not todo_ids:
+        return {"fingerprint": fingerprint, "buckets_completed": 0,
+                "task_rows_max": 0, "task_rows_median": 0}
 
-    # re-derive the bucket on the output side: it is a deterministic
-    # function of conv_id, no need to thread it through the pipeline
-    from pyspark.sql import Observation
-    if strategy == "fused":
-        from p_id_text_extraction_spark.plans.pipeline import extract_pipeline_fused
-        obs = None
-        base = extract_pipeline_fused(todo.drop("bucket_id"), cfg)
-    else:
-        obs = Observation("lineage")
-        base = extract_pipeline(todo.drop("bucket_id"), cfg, observation=obs)
-    n_write = write_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    todo = with_bucket(turns.select("conv_id", "turn_idx", "text"), n_buckets, bucket_fn)
+    if len(todo_ids) < n_buckets:
+        todo = todo.filter(F.col("bucket_id").isin(todo_ids))   # J7: resume filter
+    n_write = min(write_partitions or int(spark.conf.get("spark.sql.shuffle.partitions")),
+                  len(todo_ids))
+    counters = spark.sparkContext.accumulator({}, ReplaceByKey())
     spans = (
-        with_bucket(base, n_buckets, bucket_fn)
+        todo.repartition(n_write, write_slots(todo_ids, n_buckets, n_write))
+        .mapInPandas(make_job_kernel(cfg, counters), JOB_ROW_SCHEMA)
         .withColumn("job_fingerprint", F.lit(fingerprint))
-        .repartition(n_write, "bucket_id", "conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx", "span_rank")
-        .persist()
     )
-    from p_id_text_extraction_spark.util import dynamic_partition_overwrite
-    try:
-        if catalog == "iceberg":
-            # one atomic overwrite-partitions snapshot: replaced partitions
-            # are EXPLICIT (the todo set), so a bucket retried to zero
-            # spans still drops its old files -- no pre-clear step, and a
-            # reader never observes a half-written state.  A fully-resumed
-            # run (no todo buckets) commits nothing: no empty snapshots.
-            if spans_layout == "bucket":
-                # hidden partitioning: no bucket_id data column -- the
-                # table's bucket(conv_id, n) transform IS the bucketing,
-                # and the restart bucket ids align by construction (same
-                # murmur3 function on both sides)
-                spans_w = spans.drop("bucket_id")
-                ice.ensure_table(spark, output_dir, spans_w.schema,
-                                 ("job_fingerprint",
-                                  f"bucket(conv_id, {n_buckets})"))
-                if todo_ids:
-                    ice.overwrite_span_partitions(
-                        spans_w, output_dir,
-                        replaced=[{"job_fingerprint": fingerprint,
-                                   "conv_id_bucket": b} for b in todo_ids])
-            else:
-                ice.ensure_table(spark, output_dir, spans.schema,
-                                 ("job_fingerprint", "bucket_id"))
-                if todo_ids:
-                    ice.overwrite_span_partitions(
-                        spans, output_dir,
-                        replaced=[{"job_fingerprint": fingerprint, "bucket_id": b}
-                                  for b in todo_ids])
-        else:
-            _clear_todo_partitions(spark, output_dir, fingerprint, todo_ids)
-            with dynamic_partition_overwrite(spark):
-                (spans.write.mode("overwrite")
-                 .partitionBy("job_fingerprint", "bucket_id")
-                 .parquet(output_dir))
-
-        # lineage counters per completed bucket (FIXTURES.md section 3), all
-        # from THIS run's plan: observe() rode the candidate scan, and the
-        # per-bucket span counts aggregate the cached spans -- no read-back.
-        # classifier_drop_rate (candidates dropped by suppress/merge vs
-        # candidates detected -- the boxes-before/after ratio of
-        # grouping_logic.py:978-983) is a run-level rate stamped on each
-        # bucket row of this run.
-        per_bucket = {r.bucket_id: r.cnt
-                      for r in spans.groupBy("bucket_id").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-        # WRITE-STAGE SKEW COUNTERS: rows per task of the cached spans'
-        # (bucket_id, conv_id) partitioning -- the production measurement
-        # of the skew story (a hot conversation concentrates its spans in
-        # one task).  One pass over the cache, <= n_write tiny rows back.
-        import statistics
-        pp = [r.cnt for r in spans.groupBy(
-            F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("cnt")).collect()]
-        task_rows_max = max(pp) if pp else 0
-        task_rows_median = int(statistics.median(pp)) if pp else 0
-    finally:
-        spans.unpersist()
-    try:
-        m = dict(obs.get) if obs is not None else {}
-    except Exception:  # noqa: BLE001 - zero-task plans never emit the observed row
-        m = {}
-    candidates_in = int(m.get("candidates_in") or 0)
-    spans_total = sum(per_bucket.values())
-    if obs is None:
-        drop_rate = float("nan")   # fused kernel never materializes candidates
+    if catalog == "iceberg":
+        # one atomic overwrite-partitions snapshot: replaced partitions
+        # are EXPLICIT (the todo set), so a bucket retried to zero spans
+        # still drops its old files -- no pre-clear step, and a reader
+        # never observes a half-written state.
+        part_col = spec_col = "bucket_id"
+        if spans_layout == "bucket":
+            # hidden partitioning: no bucket_id data column.  The restart
+            # bucket IS the table's bucket(conv_id, n) value (same murmur3
+            # on both sides), so it rides along as that partition column.
+            part_col, spec_col = "conv_id_bucket", f"bucket(conv_id, {n_buckets})"
+            spans = spans.withColumnRenamed("bucket_id", part_col)
+        ice.ensure_table(spark, output_dir, spans.drop("conv_id_bucket").schema,
+                         ("job_fingerprint", spec_col))
+        ice.overwrite_span_partitions(
+            spans, output_dir,
+            replaced=[{"job_fingerprint": fingerprint, part_col: b} for b in todo_ids])
     else:
-        drop_rate = (candidates_in - spans_total) / candidates_in if candidates_in else 0.0
+        _clear_todo_partitions(spark, output_dir, fingerprint, todo_ids)
+        from p_id_text_extraction_spark.util import dynamic_partition_overwrite
+        with dynamic_partition_overwrite(spark):
+            (spans.write.mode("overwrite")
+             .partitionBy("job_fingerprint", "bucket_id")
+             .parquet(output_dir))
 
-    turns_in = {r.bucket_id: r.cnt
-                for r in todo.groupBy("bucket_id").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    # lineage counters per completed bucket (FIXTURES.md section 3), all
+    # from THIS run's kernel tasks -- no read-back.  classifier_drop_rate
+    # (candidates dropped by suppress/merge vs candidates detected -- the
+    # boxes-before/after ratio of grouping_logic.py:978-983) is a
+    # run-level rate stamped on each bucket row of this run; the skew
+    # counters are the span rows per write task (a hot conversation
+    # concentrates its bucket's spans in one task).
+    turns_in: Counter = Counter()
+    spans_out: Counter = Counter()
+    candidates_in = 0
+    task_rows = []
+    for t, s, c in counters.value.values():
+        turns_in.update(t)
+        spans_out.update(s)
+        candidates_in += c
+        if s:
+            task_rows.append(sum(s.values()))
+    spans_total = sum(spans_out.values())
+    drop_rate = (candidates_in - spans_total) / candidates_in if candidates_in else 0.0
+    task_rows_max = max(task_rows, default=0)
+    task_rows_median = int(statistics.median(task_rows)) if task_rows else 0
+
     from datetime import datetime, timezone
     now = datetime.now(timezone.utc)
     # every todo bucket this run COVERED gets a manifest row -- including
@@ -287,17 +287,12 @@ def run_with_resume(
     # resumes.  (turns_in empty but input non-empty = a resume whose
     # remaining todo buckets are all legitimately hash-empty: record them,
     # or the run livelocks re-clearing them forever.)
-    if turns_in:
-        record = True
-    elif todo_ids:
-        record = bool(turns.limit(1).count())
-    else:
-        record = False
+    record = bool(turns_in) or bool(turns.limit(1).count())
     manifest_rows = [
-        (b, fingerprint, int(turns_in.get(b, 0)), int(per_bucket.get(b, 0)), float(drop_rate),
-         int(task_rows_max), int(task_rows_median),
-         PROBE_COUNTED if turns_in.get(b, 0) else PROBE_HASH_EMPTY, now)
-        for b in sorted(todo_ids)
+        (b, fingerprint, turns_in[b], spans_out[b], drop_rate,
+         task_rows_max, task_rows_median,
+         PROBE_COUNTED if turns_in[b] else PROBE_HASH_EMPTY, now)
+        for b in todo_ids
     ] if record else []
     if manifest_rows:
         mdf = spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA)
@@ -308,5 +303,4 @@ def run_with_resume(
             mdf.write.mode("append").parquet(manifest_dir)
 
     return {"fingerprint": fingerprint, "buckets_completed": len(manifest_rows),
-            "task_rows_max": int(task_rows_max),
-            "task_rows_median": int(task_rows_median)}
+            "task_rows_max": task_rows_max, "task_rows_median": task_rows_median}

@@ -1,5 +1,5 @@
-"""CLI job end-to-end: jobs/extract_job.py over real parquet in/out, both
-strategies, byte-identical outputs, idempotent reruns."""
+"""CLI job end-to-end: jobs/extract_job.py over real parquet in/out,
+output equal to the relational plan, idempotent reruns."""
 
 from __future__ import annotations
 
@@ -14,27 +14,24 @@ from p_id_text_extraction_spark.sources.transcripts import gen_turns, transcript
 
 def test_cli_args_defaults():
     a = parse_args(["--input", "i", "--output", "o", "--manifest", "m"])
-    assert a.buckets == 256 and a.strategy == "relational"
+    assert a.buckets == 256 and a.catalog == "parquet" and not hasattr(a, "strategy")
 
 
-def test_cli_both_strategies_end_to_end(spark, tmp_path):
+def test_cli_end_to_end(spark, tmp_path):
+    from p_id_text_extraction_spark.plans.pipeline import extract_pipeline
     src = str(tmp_path / "in")
     transcripts_df(spark, gen_turns(30, max_turns=8, seed=9)).write.parquet(src)
 
     rc = main(["--input", src, "--output", str(tmp_path / "o_rel"),
                "--manifest", str(tmp_path / "m_rel"), "--buckets", "4"], spark=spark)
     assert rc == 0
-    rc = main(["--input", src, "--output", str(tmp_path / "o_fus"),
-               "--manifest", str(tmp_path / "m_fus"), "--buckets", "4",
-               "--strategy", "fused"], spark=spark)
-    assert rc == 0
 
     key = ["conv_id", "turn_idx", "span_rank"]
-    rel = [tuple(r) for r in spark.read.parquet(str(tmp_path / "o_rel"))
+    got = [tuple(r) for r in spark.read.parquet(str(tmp_path / "o_rel"))
            .drop("bucket_id", "job_fingerprint").orderBy(*key).collect()]
-    fus = [tuple(r) for r in spark.read.parquet(str(tmp_path / "o_fus"))
-           .drop("bucket_id", "job_fingerprint").orderBy(*key).collect()]
-    assert rel == fus and len(rel) > 0
+    want = [tuple(r) for r in extract_pipeline(spark.read.parquet(src))
+            .orderBy(*key).collect()]
+    assert got == want and len(got) > 0
 
     # rerun = no-op (resume protocol through the CLI)
     import io

@@ -234,17 +234,15 @@ def test_resume_with_bucket_partitioned_spans(spark, tmp_path):
         job_fingerprint(DEFAULT_CONFIG, 8)
 
 
-def test_fused_strategy_through_iceberg(spark, tmp_path):
-    """Both strategies must write byte-identical spans through the Iceberg
-    catalog path too."""
+def test_job_through_iceberg_equals_relational_pipeline(spark, tmp_path):
+    """The job's spans through the Iceberg catalog path must equal the
+    relational `extract_pipeline` rows."""
+    from p_id_text_extraction_spark.plans.pipeline import extract_pipeline
     turns = transcripts_df(spark, gen_turns(25, max_turns=8, seed=5))
-    run_with_resume(spark, turns, str(tmp_path / "rel"), str(tmp_path / "relm"),
+    run_with_resume(spark, turns, str(tmp_path / "ice"), str(tmp_path / "icem"),
                     n_buckets=4, catalog="iceberg")
-    run_with_resume(spark, turns, str(tmp_path / "fus"), str(tmp_path / "fusm"),
-                    n_buckets=4, catalog="iceberg", strategy="fused")
-    a = [tuple(r) for r in ice.read_table(spark, str(tmp_path / "rel"))
-         .drop("bucket_id", "job_fingerprint").orderBy(*KEY).collect()]
-    b = [tuple(r) for r in ice.read_table(spark, str(tmp_path / "fus"))
+    a = [tuple(r) for r in extract_pipeline(turns).orderBy(*KEY).collect()]
+    b = [tuple(r) for r in ice.read_table(spark, str(tmp_path / "ice"))
          .drop("bucket_id", "job_fingerprint").orderBy(*KEY).collect()]
     assert a == b and a
 

@@ -105,16 +105,14 @@ def test_fingerprint_isolation(spark, turns_df, tmp_path):
     assert r["buckets_completed"] == 4  # nothing skipped
 
 
-def test_fused_strategy_resume_identical(spark, turns_df, tmp_path):
-    """The fused map-only strategy must write byte-identical spans through
-    the same resume protocol."""
-    run_with_resume(spark, turns_df, str(tmp_path / "or"), str(tmp_path / "mr"), n_buckets=8)
-    run_with_resume(spark, turns_df, str(tmp_path / "of"), str(tmp_path / "mf"),
-                    n_buckets=8, strategy="fused")
-    assert _rows(spark, str(tmp_path / "of")) == _rows(spark, str(tmp_path / "or"))
-    import math
-    rows = spark.read.parquet(str(tmp_path / "mf")).collect()
-    assert all(math.isnan(r.classifier_drop_rate) for r in rows)
+def test_job_output_equals_relational_pipeline(spark, turns_df, tmp_path):
+    """The job's spans, written through the resume protocol, must equal
+    the relational `extract_pipeline` rows -- the golden cross-check of
+    the fused kernel against the declarative plan."""
+    from p_id_text_extraction_spark.plans.pipeline import extract_pipeline
+    run_with_resume(spark, turns_df, str(tmp_path / "o"), str(tmp_path / "m"), n_buckets=8)
+    want = [tuple(r) for r in extract_pipeline(turns_df).orderBy(*KEY).collect()]
+    assert _rows(spark, str(tmp_path / "o")) == want and want
 
 
 def test_zero_span_todo_bucket_cleared(spark, tmp_path):

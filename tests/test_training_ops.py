@@ -206,6 +206,7 @@ def test_minhash_sketches_kernel_equals_relational(spark):
         (5, ""),                     # empty -> no row
         (6, "x y z"),                # exactly one shingle
         (7, "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 3),
+        (8, None),                   # NULL text -> no row
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     hg_rel = {r.doc_id: sorted(r.hg) for r in dedup.hashed_gram_arrays(df).collect()
@@ -233,6 +234,7 @@ def test_hashed_grams_kernel_equals_relational(spark):
         (3, "one two"),
         (4, ""),
         (5, "x y z"),
+        (6, None),                   # NULL text -> no row
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     grams = dedup.gram_arrays(df)
@@ -246,7 +248,7 @@ def test_hashed_grams_kernel_equals_relational(spark):
     out = dedup.hashed_grams_kernel(df).collect()
     assert {r.doc_id for r in out} == set(rel_sizes)
     for r in out:
-        assert sorted(r.hs) == sorted(rel[r.doc_id]), r.doc_id
+        assert r.hs == sorted(rel[r.doc_id]), r.doc_id   # emitted sorted
         assert len(r.hs) == rel_sizes[r.doc_id], r.doc_id
 
 

@@ -217,11 +217,9 @@ def resume_cycle() -> dict:
     Disk shape (this box has ~57 GB scratch and the corpus is 22 GB):
     the uninterrupted baseline is checksummed IN-PLAN over the fused
     pipeline -- a map-only scan into a 1-row aggregate, zero output, zero
-    spill -- instead of materializing a second 20 GB spans tree; each
+    spill -- instead of materializing a second 20 GB spans tree; and each
     resume phase runs in its OWN session so shuffle scratch (the
-    repartition before the write) is freed between phases; and the runs
-    use the FUSED production strategy (three relational runs would each
-    add a 22 GB shuffle spill on top)."""
+    repartition of the turns by bucket) is freed between phases."""
     from pyspark.sql import functions as F  # noqa: F401  (checksum_df)
 
     from p_id_text_extraction_spark.plans.checkpoint import run_with_resume
@@ -246,8 +244,7 @@ def resume_cycle() -> dict:
     spark = session()
     t0 = time.monotonic()
     r1 = run_with_resume(spark, read_transcripts(spark, DATA_DIR), out_b, man_b,
-                         n_buckets=32, bucket_filter=list(range(8)),
-                         strategy="fused")
+                         n_buckets=32, bucket_filter=list(range(8)))
     wall_part = round(time.monotonic() - t0, 1)
     spark.stop()
     # phase 2: resume completes the remaining 24; third run is a no-op;
@@ -255,11 +252,9 @@ def resume_cycle() -> dict:
     spark = session()
     turns = read_transcripts(spark, DATA_DIR)
     t0 = time.monotonic()
-    r2 = run_with_resume(spark, turns, out_b, man_b, n_buckets=32,
-                         strategy="fused")
+    r2 = run_with_resume(spark, turns, out_b, man_b, n_buckets=32)
     wall_resume = round(time.monotonic() - t0, 1)
-    r3 = run_with_resume(spark, turns, out_b, man_b, n_buckets=32,
-                         strategy="fused")
+    r3 = run_with_resume(spark, turns, out_b, man_b, n_buckets=32)
     ck_b = checksum_df(spark.read.parquet(out_b))
     for d in (out_b, man_b):
         shutil.rmtree(d, ignore_errors=True)
@@ -360,7 +355,7 @@ def main() -> None:
         "exactly the design claim (SURVEY 7.3-4): wall time is bounded by the",
         "slowest SPLIT, not the largest conversation.",
         "",
-        "## Kill-and-resume at 32 buckets (fused production strategy)",
+        "## Kill-and-resume at 32 buckets",
         "",
         f"Uninterrupted baseline (in-plan checksum over the fused pipeline,",
         f"zero output): {res['wall_uninterrupted_s']}s.  Killed run:",
